@@ -659,8 +659,11 @@ def topk_two_sided_exact(t: dict[str, DataFrame]) -> DataFrame:
         ).cast("int")
     )
     return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .withColumn("_max_bd", F.max("bd").over(wq))
+        # the boundary max comes BEFORE the rank window: a window between
+        # row_number and the rank filter stops InferWindowGroupLimit
+        # from planting the WindowGroupLimit that bounds the rank sort
+        rescored.withColumn("_max_bd", F.max("bd").over(wq))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
         .select(
             "q_id",

@@ -989,25 +989,13 @@ def test_sql_text_path_plans_like_dataframe(tables):
     assert "HashAggregate" in p, p
 
 
-def test_two_sided_exact_is_keyed_join(tables, monkeypatch):
+def test_two_sided_exact_is_keyed_join(tables):
     """topk_two_sided_exact must co-locate corpus chunks with their
     replicated queries through KEYED machinery (the chunk-cogrouped
     Arrow propose pass since r13, with the candidate rescore as keyed
     joins), never a cartesian or broadcast-nested-loop — the whole
     point of the chunk-id is to turn exact Q×C scoring into co-located
-    per-chunk work whose wall-clock divides across executors.
-
-    The candidate set is localCheckpoint-pinned since r14 (the guard's
-    boundary aggregate is a second plan reference), which would hide
-    the propose subtree behind the pin — so the pin is neutralized
-    here to audit the FULL pipeline shape in one plan."""
-    # Spark 4: pyspark.sql.DataFrame is the ABC; the session builds
-    # pyspark.sql.classic.dataframe.DataFrame instances — patch there.
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    monkeypatch.setattr(
-        DataFrame, "localCheckpoint", lambda self, eager=True: self
-    )
+    per-chunk work whose wall-clock divides across executors."""
     p = plan_of(tables, "topk_two_sided_exact")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
