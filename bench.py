@@ -51,7 +51,7 @@ def main() -> int:
         "q1_pricing_summary",   # scan + codegen agg
         "win_running_gmv",      # window function path
         "text_dedup_exact",     # md5 + row_number
-        "cosine_topk_pandas",   # Arrow mapInPandas + numpy workers
+        "cosine_topk",          # Arrow mapInPandas + numpy workers
     ):
         if warm_name in registry.BUILDERS:
             try:

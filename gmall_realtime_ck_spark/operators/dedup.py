@@ -229,10 +229,43 @@ def minhash_lsh_pairs(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-#: per-task cap on the simhash md5 token memo (same bound + rationale
-#: as multimodal.PHASH_GRAM_CACHE_CAP — pure memoization, any cap
-#: yields identical fingerprints)
-SIMHASH_TOKEN_CACHE_CAP = 1 << 16
+#: per-task cap on the ``md5_bits_memo`` entries (~700 bytes each ⇒
+#: ~45 MB ceiling per task). Natural text holds a few tens of
+#: thousands of distinct tokens or byte 4-grams, so the cap is never
+#: hit there; it exists for adversarial/binary-ish or CJK payloads
+#: whose key space is up to 2^32 at 100 TB. Pure memoization — any cap
+#: value (including 0 = effectively disabled) yields identical
+#: fingerprints (law-pinned in tests/test_multimodal.py). Builders
+#: read it at BUILD time, so patching it before building takes effect.
+MD5_BITS_CACHE_CAP = 1 << 16
+
+
+def md5_bits_memo(cap: int):
+    """Worker-side memo of key → (60,) int64 bit vector of the H60
+    hash (md5[:15] as an integer — the same value as H60_SPARK /
+    H60_DUCK), shared by the simhash and phash fingerprints. ``str``
+    keys hash their utf-8 bytes, ``bytes`` keys hash as-is. BOUNDED:
+    past ``cap`` entries the memo is cleared wholesale (no LRU
+    bookkeeping on the hot path) — md5 values are recomputed, never
+    changed. Call it once per task, inside the Arrow map function."""
+    import hashlib
+
+    import numpy as np
+
+    shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
+    cache: dict = {}
+
+    def bits_for(key) -> np.ndarray:
+        v = cache.get(key)
+        if v is None:
+            raw = key.encode("utf-8") if isinstance(key, str) else key
+            v = (int(hashlib.md5(raw).hexdigest()[:15], 16) >> shifts) & 1
+            if len(cache) >= cap:
+                cache.clear()
+            cache[key] = v
+        return v
+
+    return bits_for
 
 
 def simhash_docs(t: dict[str, DataFrame]) -> DataFrame:
@@ -257,26 +290,14 @@ def simhash_docs(t: dict[str, DataFrame]) -> DataFrame:
     drop exactly as the explode dropped them.
     """
     docs = t["documents"]
-    cache_cap = SIMHASH_TOKEN_CACHE_CAP
+    cache_cap = MD5_BITS_CACHE_CAP
 
     def fingerprint(batches):
-        import hashlib
-
         import numpy as np
         import pandas as pd
 
         shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
-        cache: dict[str, np.ndarray] = {}
-
-        def bits_for(tok: str) -> np.ndarray:
-            v = cache.get(tok)
-            if v is None:
-                h = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:15], 16)
-                v = (h >> shifts) & 1
-                if len(cache) >= cache_cap:
-                    cache.clear()
-                cache[tok] = v
-            return v
+        bits_for = md5_bits_memo(cache_cap)
 
         for pdf in batches:
             out_ids, out_sh = [], []

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import dedup
 from .dedup import (
     SIMHASH_BAND_BITS,
     SIMHASH_BANDS,
@@ -38,15 +39,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-#: per-task cap on the phash fingerprint's distinct-gram md5 memo
-#: (~700 bytes/entry ⇒ ~45 MB ceiling per task). Natural ASCII text
-#: holds a few tens of thousands of distinct 4-grams (never hits the
-#: cap); the cap exists for adversarial/binary-ish or CJK payloads
-#: whose gram space is up to 2^32 at 100 TB. Pure memoization — any
-#: cap value (including 0 = effectively disabled) yields identical
-#: fingerprints (law-pinned in tests/test_multimodal.py).
-PHASH_GRAM_CACHE_CAP = 1 << 16
 
 #: media row: bytes + typed metadata (mime decides the decode route)
 MEDIA_SCHEMA = StructType(
@@ -450,38 +442,14 @@ def xmodal_phash_neardup(t: dict[str, DataFrame]) -> DataFrame:
     # int64. The fingerprint stage now shuffles NOTHING — 8 bytes/media
     # emerge from the scan — which is the §8 "move heavy bytes once"
     # posture; only the banded candidate join below shuffles.
-    # Captured as a closure VALUE at build time so a test (or caller)
-    # can disable the cache by patching the module constant before
-    # building — the cache is pure memoization, results are identical
-    # at any cap (law-pinned in tests/test_multimodal.py).
-    cache_cap = PHASH_GRAM_CACHE_CAP
+    cache_cap = dedup.MD5_BITS_CACHE_CAP  # read at build time, see its doc
 
     def fingerprint(batches):
-        import hashlib
-
         import numpy as np
         import pandas as pd
 
         shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
-        # gram bytes -> (60,) int64 bit vector. BOUNDED (r14, VERDICT
-        # r13 #5): each entry costs ~700 bytes (key + dict slot + 60×
-        # int64); natural ASCII text holds a few tens of thousands of
-        # distinct 4-grams so the cap is never hit there, but a
-        # binary-ish/CJK payload mix has up to 2^32 distinct grams and
-        # an uncapped dict could grow to GBs per task at 100 TB. On
-        # overflow the cache is cleared wholesale (no LRU bookkeeping
-        # on the hot path) — md5 values are recomputed, never changed.
-        cache: dict[bytes, np.ndarray] = {}
-
-        def bits_for(gram: bytes) -> np.ndarray:
-            v = cache.get(gram)
-            if v is None:
-                h = int(hashlib.md5(gram).hexdigest()[:15], 16)
-                v = (h >> shifts) & 1
-                if len(cache) >= cache_cap:
-                    cache.clear()
-                cache[gram] = v
-            return v
+        bits_for = dedup.md5_bits_memo(cache_cap)
 
         for pdf in batches:
             out_ids, out_ph = [], []

@@ -6,9 +6,10 @@ Dot products are computed JVM-side with a sequential fold
 (aggregate(zip_with(...))) in double precision — deterministic and
 bit-compatible with DuckDB's list_dot_product over DOUBLE[].
 
-No Python UDF: at 64-dim the higher-order-function fold is fine; for
-wide vectors (≥ 1k dims) swap in the pandas_udf batch-matmul variant in
-``cosine_topk_pandas`` (kept for parity/benchmarks).
+Every exact top-k builder shares one two-phase core: a numpy GEMM
+proposes top-(k+pad) candidates (``_propose_topk``), and only those
+pairs are re-scored with the sequential fold and ranked under a
+runtime containment guard (``_rescore_topk``).
 """
 
 from __future__ import annotations
@@ -35,13 +36,14 @@ def _with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:
 #: candidate set on real-valued data.
 CAND_PAD = 10
 
-#: ulp-drift margin for the propose-containment runtime check in
-#: ``topk_two_sided_exact``: a float64 dot over these dims drifts by
-#: ~1e-14 between BLAS GEMM and the sequential fold; 1e-9 is six
-#: orders above that while far below any meaningful cosine gap, so the
-#: check never fires on drift alone — only on a genuine containment
-#: pathology. Exact ties (duplicate vectors) satisfy cos ≥ bd − eps
-#: with equality margin, so tie-heavy data cannot raise spuriously.
+#: relative ulp-drift margin for the propose-containment runtime check
+#: in ``_rescore_topk``, scaled by max(1, |boundary|): a float64 dot
+#: over these dims drifts by ~1e-14 relative between BLAS GEMM and the
+#: sequential fold; 1e-9 is six orders above that while far below any
+#: meaningful score gap, so the check never fires on drift alone —
+#: only on a genuine containment pathology. Exact ties (duplicate
+#: vectors) satisfy score ≥ bd − margin with equality, so tie-heavy
+#: data cannot raise spuriously.
 PROPOSE_DRIFT_EPS = 1e-9
 
 
@@ -65,6 +67,156 @@ def _collect_query_side(df: DataFrame, op: str):
     return pdf
 
 
+def _matrix(vectors, unit: bool):
+    """Stack an Arrow list column into a float64 matrix, rows scaled to
+    unit length when ``unit`` (cosine) is set."""
+    import numpy as np
+
+    mat = np.stack(vectors.to_numpy()).astype(np.float64)
+    if unit:
+        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    return mat
+
+
+def _propose_topk(score, q_ids, c_ids, k: int):
+    """The one exact top-k selection over a (queries × corpus) score
+    block: self pairs are masked to -inf, each row is ordered by
+    (score DESC, id ASC) with ``lexsort`` and cut to its first k.
+    Returns ``(idx, bd)``: idx[i] holds the column positions kept for
+    query i, bd[i] the k-th score when the row was cut (it had more
+    than k columns), else -inf. The id tie-break is what makes the
+    cut exact: on exact score ties (duplicate vectors) the proposal
+    keeps the same ids the final (score DESC, id ASC) rank keeps, so
+    a propose pad only ever has to absorb sub-ulp BLAS drift.
+    """
+    import numpy as np
+
+    self_pair = q_ids[:, None] == c_ids[None, :]
+    if self_pair.any():
+        score = np.where(self_pair, -np.inf, score)
+    k = min(k, score.shape[1])
+    idx = np.lexsort((np.broadcast_to(c_ids, score.shape), -score), axis=1)[:, :k]
+    if score.shape[1] > k:
+        bd = score[np.arange(len(q_ids)), idx[:, k - 1]]
+    else:
+        bd = np.full(len(q_ids), -np.inf)
+    return idx, bd
+
+
+#: schema of a propose pass: one row per candidate pair, carrying the
+#: propose boundary of the block it came from
+CAND_SCHEMA = "q_id long, neighbor_id long, bd double"
+
+
+def _propose_frame(score, q_ids, c_ids):
+    """Top-(k+pad) candidate rows of one score block (``CAND_SCHEMA``)."""
+    import numpy as np
+    import pandas as pd
+
+    idx, bd = _propose_topk(score, q_ids, c_ids, TOP_K + CAND_PAD)
+    k = idx.shape[1]
+    return pd.DataFrame(
+        {
+            "q_id": np.repeat(q_ids, k),
+            "neighbor_id": c_ids[idx.ravel()],
+            "bd": np.repeat(bd, k),
+        }
+    )
+
+
+def _propose_broadcast(emb: DataFrame, op: str, cosine: bool) -> DataFrame:
+    """Propose pass for a bounded query set: the QUERY_MOD queries are
+    collected (capped) and broadcast as one matrix, and each corpus
+    Arrow batch is scored with one GEMM against it — the corpus never
+    shuffles, each partition reduces to its local candidates, and the
+    global top-(k+pad) per query is the union of those."""
+    import numpy as np
+
+    qpdf = _collect_query_side(
+        emb.filter(F.col("vec_id") % QUERY_MOD == 0).select("vec_id", "embedding"), op
+    )
+    q_ids = qpdf["vec_id"].to_numpy(dtype=np.int64)
+    bc = emb.sparkSession.sparkContext.broadcast((q_ids, _matrix(qpdf["embedding"], cosine)))
+
+    def gen(batches):
+        b_ids, b_mat = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            yield _propose_frame(b_mat @ _matrix(pdf["embedding"], cosine).T, b_ids, c_ids)
+
+    return emb.select("vec_id", "embedding").mapInPandas(gen, CAND_SCHEMA)
+
+
+def _rescore_topk(emb: DataFrame, cand: DataFrame, op: str, cosine: bool) -> DataFrame:
+    """Second phase of every exact top-k: ONLY the proposed pairs are
+    re-scored with the deterministic sequential fold (DOT, over the
+    norms for cosine) and ranked (score DESC, neighbor_id ASC), so the
+    output is bit-identical to the all-pairs SQL oracle while scoring
+    ~(k+pad)/|corpus| of the pairs. The candidates (≈ queries × blocks
+    × (k+pad) rows) broadcast into the corpus scans; the corpus itself
+    is never broadcast or collected.
+
+    Propose-containment guard: "global top-k ⊆ union
+    of per-block top-(k+pad)" is checked at runtime. A cut block
+    proposed k+pad candidates scoring ≥ its boundary bd under GEMM, so
+    every kept row's fold score must be ≥ max(bd) − margin over that
+    query's blocks; a violation means drift exceeded the pad's
+    absorption and a true neighbor may be missing, so the query RAISES
+    instead of returning a silently wrong answer. The boundary max
+    rides the q_id window and is computed BEFORE the rank window: a
+    window between row_number and the rank filter stops
+    InferWindowGroupLimit from planting the WindowGroupLimit that
+    bounds the rank sort. The guard feeds the output rank, so it
+    cannot be pruned, and the raise branch runs only on kept rows.
+    """
+    # the dot score never reads the norms, so Catalyst prunes them there
+    emb = _with_norm(emb)
+    qside = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("norm").alias("q_norm"),
+    )
+    cside = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("n_emb"),
+        F.col("norm").alias("n_norm"),
+    )
+    score = F.expr(DOT.format(a="q_emb", b="n_emb"))
+    if cosine:
+        score = score / (F.col("q_norm") * F.col("n_norm"))
+    # blocks no larger than k+pad can surface the -inf-masked self row
+    cand = cand.filter(F.col("q_id") != F.col("neighbor_id"))
+    rescored = (
+        qside.join(F.broadcast(cand), "q_id")
+        .join(cside, "neighbor_id")
+        .withColumn("score", score)
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    margin = F.lit(PROPOSE_DRIFT_EPS) * F.greatest(F.lit(1.0), F.abs("_max_bd"))
+    guarded_rank = F.when(
+        F.col("score") >= F.col("_max_bd") - margin, F.col("rank")
+    ).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"{op}: propose containment violated for q_id=%s "
+                "(fold score %s < propose boundary %s - margin) — "
+                "BLAS-vs-fold drift exceeded CAND_PAD's absorption",
+                F.col("q_id"),
+                F.col("score"),
+                F.col("_max_bd"),
+            )
+        ).cast("int")
+    )
+    return (
+        rescored.withColumn("_max_bd", F.max("bd").over(Window.partitionBy("q_id")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select("q_id", "neighbor_id", guarded_rank.cast("bigint").alias("rank"))
+    )
+
+
 def cosine_topk(t: dict[str, DataFrame]) -> DataFrame:
     """Exact cosine top-k, two-phase: numpy block-matmul proposes
     top-(k+pad) candidates per query (BLAS speed over the full corpus),
@@ -74,67 +226,9 @@ def cosine_topk(t: dict[str, DataFrame]) -> DataFrame:
     At scale the corpus never shuffles: queries broadcast, each
     partition reduces to its local candidates.
     """
-    import numpy as np
-    import pandas as pd
-
-    emb = _with_norm(t["embeddings"])
-    spark = emb.sparkSession
-    qpdf = _collect_query_side(
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0).select("vec_id", "embedding"),
-        "cosine_topk",
-    )
-    q_ids = qpdf["vec_id"].to_numpy(dtype=np.int64)
-    q_mat = np.stack(qpdf["embedding"].to_numpy()).astype(np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-    n_cand = TOP_K + CAND_PAD
-
-    def gen(batches):
-        b_ids, b_mat = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-            cos = (c_mat @ b_mat.T).T
-            cos[b_ids[:, None] == c_ids[None, :]] = -np.inf
-            k = min(n_cand, cos.shape[1])
-            idx = np.argpartition(-cos, kth=k - 1, axis=1)[:, :k]
-            rows = np.repeat(np.arange(len(b_ids)), k)
-            yield pd.DataFrame({"q_id": b_ids[rows], "neighbor_id": c_ids[idx.ravel()]})
-
-    cand = (
-        emb.select("vec_id", "embedding")
-        .mapInPandas(gen, "q_id long, neighbor_id long")
-        # small partitions can surface the -inf-masked self row — drop it
-        .filter(F.col("q_id") != F.col("neighbor_id"))
-        # global top-(k+pad) per query = union of per-partition candidates
-    )
-    qside = emb.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    cside = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("n_emb"),
-        F.col("norm").alias("n_norm"),
-    )
-    # broadcast the SMALL side (candidate pairs ≈ queries × (k+pad)),
-    # never the corpus: the corpus is scanned in place for each leg
-    rescored = (
-        qside.join(F.broadcast(cand), "q_id")
-        .join(cside, "neighbor_id")
-        .withColumn(
-            "cos",
-            F.expr(DOT.format(a="q_emb", b="n_emb")) / (F.col("q_norm") * F.col("n_norm")),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "neighbor_id", F.col("rank").cast("bigint").alias("rank"))
-    )
+    emb = t["embeddings"]
+    cand = _propose_broadcast(emb, "cosine_topk", cosine=True)
+    return _rescore_topk(emb, cand, "cosine_topk", cosine=True)
 
 
 NEARDUP_THRESHOLD = 0.4
@@ -155,9 +249,9 @@ BLOCK_ROWS = 4096
 #: (1 M rows × 64 dims) that is ~245 replicas/row ≈ 125 GB shuffled —
 #: the practical ceiling for exact all-pairs on a real cluster. Past
 #: it the operator raises instead of melting the shuffle service;
-#: ``embedding_neardup_lsh`` (approximate) or cluster-scoped exact
-#: dedup (``embedding_semdedup``'s per-cluster gemm) are the
-#: documented 100 TB paths.
+#: cluster-scoped exact dedup (``embedding_neardup_scoped`` and
+#: ``embedding_semdedup``'s per-cluster gemm) is the documented
+#: 100 TB path.
 MAX_EXACT_NEARDUP_ROWS = 1_000_000
 
 
@@ -179,9 +273,8 @@ def _candidate_pairs_blockpairs(emb: DataFrame, threshold: float) -> DataFrame:
     parallel across block pairs. Why not hyperplane LSH here: at this
     oracle's 0.4 threshold over near-orthogonal vectors the per-bit
     collision gap (0.63 vs 0.50) is too narrow for ANY (rows, bands)
-    to reach ~0 miss probability without admitting ~all pairs;
-    LSH is the approximate path (``embedding_neardup_lsh``), not a
-    lossless candidate generator at this margin.
+    to reach ~0 miss probability without admitting ~all pairs, so
+    LSH is not a lossless candidate generator at this margin.
     """
     import numpy as np
     import pandas as pd
@@ -193,8 +286,8 @@ def _candidate_pairs_blockpairs(emb: DataFrame, threshold: float) -> DataFrame:
             f"MAX_EXACT_NEARDUP_ROWS={MAX_EXACT_NEARDUP_ROWS}; the exact "
             "block-pair path replicates each row to O(n/BLOCK_ROWS) "
             "partners and its shuffle does not scale past this bound — "
-            "use embedding_neardup_lsh (approximate) or cluster-scoped "
-            "exact dedup (embedding_semdedup) for larger corpora"
+            "use cluster-scoped exact dedup (embedding_neardup_scoped, "
+            "embedding_semdedup) for larger corpora"
         )
     n_blocks = max(1, -(-n // BLOCK_ROWS))
     eps_thr = threshold - 1e-6
@@ -258,68 +351,40 @@ def embedding_neardup_pairs(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def cosine_topk_pandas(t: dict[str, DataFrame]) -> DataFrame:
-    """Brute-force cosine top-k, Arrow batch-matmul path: each corpus
-    partition is scored against the broadcast query matrix with numpy
-    (one BLAS gemm per batch), top-k selected with argpartition. For
-    wide vectors (≥1k dims) this is the fast path — the HOF fold in
-    cosine_topk wins on exactness (bit-identical to the SQL oracle),
-    this wins on throughput. Declared rows-only: BLAS summation order
-    can flip ranks of near-tied neighbors vs the sequential oracle.
-    """
-    import numpy as np
-    import pandas as pd
-
-    emb = t["embeddings"]
-    spark = emb.sparkSession
-    qpdf = _collect_query_side(
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0).select("vec_id", "embedding"),
-        "cosine_topk_pandas",
-    )
-    q_ids = qpdf["vec_id"].to_numpy(dtype=np.int64)
-    q_mat = np.stack(qpdf["embedding"].to_numpy()).astype(np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def gen(batches):
-        b_ids, b_mat = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-            cos = (c_mat @ b_mat.T).T  # (n_queries, corpus_batch)
-            cos[b_ids[:, None] == c_ids[None, :]] = -np.inf  # exclude self
-            k = min(TOP_K, cos.shape[1])
-            idx = np.argpartition(-cos, kth=k - 1, axis=1)[:, :k]
-            rows = np.repeat(np.arange(len(b_ids)), k)
-            cols = idx.ravel()
-            yield pd.DataFrame(
-                {
-                    "q_id": b_ids[rows],
-                    "neighbor_id": c_ids[cols],
-                    "cos": cos[rows, cols],
-                }
-            )
-
-    # per-partition candidates → global top-k per query (tiny shuffle:
-    # n_queries × partitions × k rows, not the full n² score matrix)
-    scored = emb.select("vec_id", "embedding").mapInPandas(
-        gen, "q_id long, neighbor_id long, cos double"
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "neighbor_id", F.col("rank").cast("bigint").alias("rank"))
-    )
-
-
 N_PROBE = 2  # coarse cells probed per query
 
 
-def cosine_topk_ivf(t: dict[str, DataFrame], cells: DataFrame | None = None) -> DataFrame:
+def _cell_centroids(emb: DataFrame):
+    """Unit-length centroid of every ``label`` cell, from one
+    distributed (label, dim) sum/count aggregation — labels × dims
+    rows, the only table the IVF paths bring to the driver. Returns
+    (cell ids sorted ascending as int64, centroid matrix)."""
+    import numpy as np
+
+    cpdf = (
+        emb.select("label", F.posexplode("embedding").alias("i", "x"))
+        .groupBy("label", "i")
+        .agg(F.sum(F.col("x").cast("double")).alias("s"), F.count(F.lit(1)).alias("n"))
+        .toPandas()
+    )
+    labels = np.sort(cpdf["label"].unique())
+    cent = np.zeros((len(labels), int(cpdf["i"].max()) + 1))
+    lab_pos = {int(lab): j for j, lab in enumerate(labels)}
+    for lab, i, s, n in zip(cpdf["label"], cpdf["i"], cpdf["s"], cpdf["n"]):
+        cent[lab_pos[int(lab)], int(i)] = s / n
+    cent /= np.linalg.norm(cent, axis=1, keepdims=True)
+    return labels.astype("int64"), cent
+
+
+def _probe_cells(q_unit, cent):
+    """Positions of each unit query's N_PROBE nearest cells by centroid
+    cosine (stable order, so equal cosines pick the lower cell)."""
+    import numpy as np
+
+    return np.argsort(-(q_unit @ cent.T), axis=1, kind="stable")[:, :N_PROBE]
+
+
+def cosine_topk_ivf(t: dict[str, DataFrame]) -> DataFrame:
     """IVF multi-probe ANN: the ``label`` column acts as the
     coarse-quantizer cell id (in production: k-means over a sample,
     assign by nearest centroid). Cell centroids are computed from the
@@ -330,60 +395,25 @@ def cosine_topk_ivf(t: dict[str, DataFrame], cells: DataFrame | None = None) -> 
     never shuffles — the (query, probe-cell) table broadcasts into the
     scan. Declared without a value oracle (approximate by
     construction).
-
-    ``cells`` (vec_id → cluster) overrides the label column as the
-    cell assignment — the seam a learned quantizer plugs into (see
-    ``cosine_topk_ivf_kmeans``).
     """
-    import numpy as np
-
     emb = _with_norm(t["embeddings"])
-    if cells is not None:
-        emb = emb.drop("label").join(
-            cells.select("vec_id", F.col("cluster").cast("int").alias("label")), "vec_id"
-        )
-        # r13: pin the re-labelled corpus ONCE — it is consumed by the
-        # centroid toPandas, the query-side collect, and the probe-scan
-        # join (three separate jobs), and Catalyst inlines each as a
-        # plan copy, so the whole upstream cell build (e.g. the 2-round
-        # Lloyd chain in cosine_topk_ivf_kmeans) re-executed 3×. Lazy:
-        # the centroid job is the first, single-reference consumer.
-        emb = emb.localCheckpoint(eager=False)
     spark = emb.sparkSession
+    cell_ids, cent = _cell_centroids(emb)
 
-    # 1. centroids: distributed (label, dim) sum/count, collected small
-    cpdf = (
-        emb.select("label", F.posexplode("embedding").alias("i", "x"))
-        .groupBy("label", "i")
-        .agg(F.sum(F.col("x").cast("double")).alias("s"), F.count(F.lit(1)).alias("n"))
-        .toPandas()
-    )
-    labels = np.sort(cpdf["label"].unique())
-    dims = cpdf["i"].max() + 1
-    cent = np.zeros((len(labels), dims))
-    lab_pos = {int(l): j for j, l in enumerate(labels)}
-    for lab, i, s, n in zip(cpdf["label"], cpdf["i"], cpdf["s"], cpdf["n"]):
-        cent[lab_pos[int(lab)], int(i)] = s / n
-    cent /= np.linalg.norm(cent, axis=1, keepdims=True)
-
-    # 2. probe lists: queries × centroids cosine, top-N_PROBE cells
     qpdf = _collect_query_side(
         emb.filter(F.col("vec_id") % QUERY_MOD == 0).select("vec_id", "embedding"),
         "cosine_topk_ivf",
     )
-    q_mat = np.stack(qpdf["embedding"].to_numpy()).astype(np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    cell_cos = q_mat @ cent.T
-    order = np.argsort(-cell_cos, axis=1, kind="stable")[:, :N_PROBE]
+    order = _probe_cells(_matrix(qpdf["embedding"], True), cent)
     probes = [
-        (int(qid), int(labels[c]), [float(x) for x in vec])
+        (int(qid), int(cell_ids[c]), [float(x) for x in vec])
         for qid, vec, cells in zip(qpdf["vec_id"], qpdf["embedding"], order)
         for c in cells
     ]
     qdf = spark.createDataFrame(probes, "q_id long, q_cell int, q_emb array<double>")
     qdf = qdf.withColumn("q_norm", F.expr(f"sqrt({DOT.format(a='q_emb', b='q_emb')})"))
 
-    # 3. score only the probed cells (corpus side stays in place)
+    # score only the probed cells (corpus side stays in place)
     corpus = emb.select("vec_id", F.col("label").alias("cell"), "embedding", "norm")
     scored = (
         corpus.join(
@@ -401,18 +431,6 @@ def cosine_topk_ivf(t: dict[str, DataFrame], cells: DataFrame | None = None) -> 
         .filter(F.col("rank") <= TOP_K)
         .select("q_id", F.col("vec_id").alias("neighbor_id"), F.col("rank").cast("bigint").alias("rank"))
     )
-
-
-def cosine_topk_ivf_kmeans(t: dict[str, DataFrame]) -> DataFrame:
-    """IVF probing over k-means-REFINED cells: the coarse quantizer is
-    ``embedding_kmeans_assign`` (2 Lloyd rounds from the label init)
-    instead of the raw label column — the composition a production
-    index build runs (cluster → assign → probe). Same probe machinery,
-    same output schema; bench-only (approximate, like the other IVF
-    paths); recall vs the exact baseline is pytest-pinned alongside the
-    label-cell variant.
-    """
-    return cosine_topk_ivf(t, cells=embedding_kmeans_assign(t))
 
 
 def topk_two_sided_ann(t: dict[str, DataFrame]) -> DataFrame:
@@ -434,26 +452,14 @@ def topk_two_sided_ann(t: dict[str, DataFrame]) -> DataFrame:
 
     Same output schema as ``cosine_topk``; approximate by construction
     (rows-only check + recall-floor pytest, like the IVF variant).
+    Centroids and probe selection are the IVF variant's own helpers,
+    so both paths probe the same cells.
     """
     import numpy as np
     import pandas as pd
 
     emb = _with_norm(t["embeddings"])
-
-    cpdf = (
-        emb.select("label", F.posexplode("embedding").alias("i", "x"))
-        .groupBy("label", "i")
-        .agg(F.sum(F.col("x").cast("double")).alias("s"), F.count(F.lit(1)).alias("n"))
-        .toPandas()
-    )
-    labels = np.sort(cpdf["label"].unique())
-    dims = int(cpdf["i"].max()) + 1
-    cent = np.zeros((len(labels), dims))
-    lab_pos = {int(lab): j for j, lab in enumerate(labels)}
-    for lab, i, s, n in zip(cpdf["label"], cpdf["i"], cpdf["s"], cpdf["n"]):
-        cent[lab_pos[int(lab)], int(i)] = s / n
-    cent /= np.linalg.norm(cent, axis=1, keepdims=True)
-    cell_ids = labels.astype("int64")
+    cell_ids, cent = _cell_centroids(emb)
 
     queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"), F.col("norm").alias("q_norm")
@@ -463,9 +469,7 @@ def topk_two_sided_ann(t: dict[str, DataFrame]) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            q = np.stack(pdf["q_emb"].to_numpy()).astype(np.float64)
-            qn = np.linalg.norm(q, axis=1, keepdims=True)
-            order = np.argsort(-(q / qn) @ cent.T, axis=1, kind="stable")[:, :N_PROBE]
+            order = _probe_cells(_matrix(pdf["q_emb"], True), cent)
             idx = np.repeat(np.arange(len(pdf)), N_PROBE)
             yield pd.DataFrame(
                 {
@@ -517,33 +521,24 @@ def topk_two_sided_exact(t: dict[str, DataFrame]) -> DataFrame:
     1. corpus rows get a static chunk id ``pmod(hash(vec_id), N)``;
     2. each query is replicated to all N chunks via one explode of a
        literal sequence — Q×N rows, linear, never driver-side;
-    3. a keyed equi-join on chunk_id co-locates each query copy with
-       exactly one corpus chunk (shuffle join, NOT a cartesian — the
-       plan sweep in test_plans keeps it honest);
-    4. per-(q_id, chunk) local top-k bounds the final shuffle to
-       Q×N×k rows, then one keyed window on q_id takes the global
-       top-k.
+    3. a keyed cogroup on chunk_id co-locates each query copy with
+       exactly one corpus chunk (shuffle, NOT a cartesian — the plan
+       sweep in test_plans keeps it honest), and one numpy GEMM per
+       chunk proposes top-(k+pad) candidates per (query, chunk) — the
+       Q×C pair blowup never materializes as JVM rows;
+    4. the shared ``_rescore_topk`` re-scores only the
+       ≤ Q×chunks×(k+pad) proposed pairs with the sequential fold and
+       takes the global top-k in one keyed window on q_id, under the
+       propose-containment guard — bit-identical to the all-pairs SQL
+       oracle.
 
-    Scoring follows ``cosine_topk``'s two-phase exactness discipline
-    (r13 rewrite, guide §4.2): numpy GEMM proposes top-(k+pad)
-    candidates per (query, chunk) inside a chunk-cogrouped Arrow pass
-    — the Q×C pair blowup never materializes as JVM rows and the
-    ~Q×C interpreted fold evaluations of the join form are gone —
-    then ONLY the ≤ Q×chunks×(k+pad) surviving pairs are re-scored
-    with the deterministic sequential-fold DOT and re-ranked, so the
-    output stays bit-identical to the all-pairs SQL oracle (the pad
-    absorbs any BLAS-vs-fold ulp reordering, same argument as
-    ``cosine_topk``). Both sides stay distributed: the query side is
-    replicated to the chunks via one explode (Q×chunks rows, linear,
-    never driver-side) and co-grouped with each corpus chunk — a
-    keyed shuffle, NOT a cartesian; the corpus never collects. Peak
-    task memory is one chunk + its query replicas, the documented
-    chunk-sizing contract.
+    The corpus never collects; peak task memory is one chunk + its
+    query replicas, the documented chunk-sizing contract.
     """
     import numpy as np
     import pandas as pd
 
-    emb = _with_norm(t["embeddings"])
+    emb = t["embeddings"]
     corpus = emb.select(
         "vec_id",
         "embedding",
@@ -557,120 +552,25 @@ def topk_two_sided_exact(t: dict[str, DataFrame]) -> DataFrame:
             F.explode(F.sequence(F.lit(0), F.lit(TWO_SIDED_CHUNKS - 1))).alias("q_chunk"),
         )
     )
-    n_cand = TOP_K + CAND_PAD
 
     def propose(key, cpdf: "pd.DataFrame", qpdf: "pd.DataFrame") -> "pd.DataFrame":
         if len(cpdf) == 0 or len(qpdf) == 0:
             return pd.DataFrame(
                 {"q_id": [], "neighbor_id": [], "bd": []}
             ).astype({"q_id": "int64", "neighbor_id": "int64", "bd": "float64"})
-        c_ids = cpdf["vec_id"].to_numpy(dtype=np.int64)
-        c_mat = np.stack(cpdf["embedding"].to_numpy()).astype(np.float64)
-        c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-        q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-        q_mat = np.stack(qpdf["q_emb"].to_numpy()).astype(np.float64)
-        q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-        cos = q_mat @ c_mat.T
-        cos[q_ids[:, None] == c_ids[None, :]] = -np.inf  # self pairs excluded
-        k = min(n_cand, cos.shape[1])
-        # deterministic (cos DESC, id ASC) order — exact-cos ties (e.g.
-        # duplicated vectors) propose the same ids the fold re-rank
-        # keeps, so the pad only ever absorbs sub-ulp BLAS drift
-        idx = np.lexsort((np.broadcast_to(c_ids, cos.shape), -cos), axis=1)[:, :k]
-        rows = np.repeat(np.arange(len(q_ids)), k)
-        # bd = the GEMM score of the LAST proposed candidate per
-        # (query, chunk) — the propose-boundary the containment check
-        # below compares against — but only when candidates were
-        # actually CUT OFF (chunk larger than k+pad); a fully-proposed
-        # chunk has no unproposed vectors and contributes -inf.
-        if cos.shape[1] > k:
-            bd = cos[np.arange(len(q_ids)), idx[:, k - 1]]
-        else:
-            bd = np.full(len(q_ids), -np.inf)
-        return pd.DataFrame(
-            {
-                "q_id": q_ids[rows],
-                "neighbor_id": c_ids[idx.ravel()],
-                "bd": np.repeat(bd, k),
-            }
+        cos = _matrix(qpdf["q_emb"], True) @ _matrix(cpdf["embedding"], True).T
+        return _propose_frame(
+            cos,
+            qpdf["q_id"].to_numpy(dtype=np.int64),
+            cpdf["vec_id"].to_numpy(dtype=np.int64),
         )
 
     cand = (
         corpus.groupBy("chunk")
         .cogroup(queries.groupBy("q_chunk"))
-        .applyInPandas(propose, "q_id long, neighbor_id long, bd double")
-        # tiny chunks can surface the -inf-masked self row — drop it
-        .filter(F.col("q_id") != F.col("neighbor_id"))
-        # single plan reference (the rescore broadcast carries bd, and
-        # the guard's per-query boundary max rides the ranking window)
-        # — no pin needed; an earlier guard form with a separate
-        # boundary aggregate was a second reference that re-ran the
-        # whole cogrouped GEMM propose pass (Exchange 10→18) until
-        # pinned, and the pin's checkpoint job itself cost ~0.2 s.
+        .applyInPandas(propose, CAND_SCHEMA)
     )
-    qside = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    cside = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("norm").alias("n_norm"),
-    )
-    # Propose-boundary guard (r14, VERDICT r13 #6): the containment
-    # argument ("global top-k ⊆ union of per-chunk top-(k+pad), pad
-    # absorbs BLAS-vs-fold ulp drift") becomes a runtime CHECK. Every
-    # kept row's fold-rescored cos must be ≥ the worst propose
-    # boundary for its query minus an ulp margin: ≥ k+pad candidates
-    # score ≥ bd under GEMM, so the kth best fold is ≥ bd − drift —
-    # a violation means drift exceeded the pad's absorption and a true
-    # neighbor may have been cut off, so the query RAISES instead of
-    # silently dropping it. The per-query boundary max RIDES THE
-    # EXISTING q_id WINDOW (bd travels on the broadcast candidate
-    # rows; max over the partition shares the ranking exchange) — the
-    # first form, a separate aggregate + broadcast join, cost two
-    # extra jobs and read 1.3–1.6× on the pair (interleaved A/B).
-    # The guard expression feeds the output rank, so it cannot be
-    # pruned, and the raise branch is evaluated only on kept rows.
-    rescored = (
-        qside.join(F.broadcast(cand), "q_id")
-        .join(cside, "neighbor_id")
-        .withColumn(
-            "cos",
-            F.expr(DOT.format(a="q_emb", b="n_emb")) / (F.col("q_norm") * F.col("n_norm")),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    wq = Window.partitionBy("q_id")
-    guarded_rank = F.when(
-        F.col("cos") >= F.col("_max_bd") - F.lit(PROPOSE_DRIFT_EPS),
-        F.col("rank"),
-    ).otherwise(
-        F.raise_error(
-            F.format_string(
-                "topk_two_sided_exact: propose containment violated for "
-                "q_id=%s (fold cos %s < propose boundary %s - eps) — "
-                "BLAS-vs-fold drift exceeded CAND_PAD's absorption",
-                F.col("q_id"),
-                F.col("cos"),
-                F.col("_max_bd"),
-            )
-        ).cast("int")
-    )
-    return (
-        # the boundary max comes BEFORE the rank window: a window between
-        # row_number and the rank filter stops InferWindowGroupLimit
-        # from planting the WindowGroupLimit that bounds the rank sort
-        rescored.withColumn("_max_bd", F.max("bd").over(wq))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "q_id",
-            "neighbor_id",
-            guarded_rank.cast("bigint").alias("rank"),
-        )
-    )
+    return _rescore_topk(emb, cand, "topk_two_sided_exact", cosine=True)
 
 
 def embedding_sq8_codes(t: dict[str, DataFrame]) -> DataFrame:
@@ -777,92 +677,6 @@ def ann_label_precision(t: dict[str, DataFrame]) -> DataFrame:
             "hits",
             F.expr(f"hits * 10000 div {TOP_K}").alias("precision_e4"),
         )
-    )
-
-
-LSH_ROWS = 6  # hyperplane bits per band
-LSH_BANDS = 25
-LSH_SEED = 7
-
-
-def _hyperplane_signatures(
-    emb: DataFrame, dim: int, n_bands: int = LSH_BANDS, n_rows: int = LSH_ROWS,
-    seed: int = LSH_SEED,
-) -> DataFrame:
-    """(vec_id, band_id, band_key) rows from seeded random-hyperplane
-    signatures: band_key packs the sign bits of n_rows projections.
-    The plane matrix is O(bands × rows × dim) — driver-tiny — and the
-    signature computation is one Arrow-batched matmul per partition;
-    the corpus never moves.
-    """
-    import numpy as np
-    import pandas as pd
-
-    planes = np.random.RandomState(seed).standard_normal((n_bands * n_rows, dim))
-    bc = emb.sparkSession.sparkContext.broadcast(planes)
-    weights = (1 << np.arange(n_rows)).astype(np.int64)
-
-    def gen(batches):
-        pl = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            bits = (mat @ pl.T) >= 0.0  # (batch, bands*rows)
-            keys = bits.reshape(len(ids), n_bands, n_rows) @ weights  # pack per band
-            band_ids = np.tile(np.arange(n_bands), len(ids))
-            yield pd.DataFrame({
-                "vec_id": np.repeat(ids, n_bands),
-                "band_id": band_ids.astype(np.int32),
-                "band_key": keys.ravel().astype(np.int64),
-            })
-
-    return emb.select("vec_id", "embedding").mapInPandas(
-        gen, "vec_id long, band_id int, band_key long"
-    )
-
-
-def embedding_neardup_lsh(t: dict[str, DataFrame]) -> DataFrame:
-    """Approximate embedding near-dup pairs — the 100 TB scale path:
-    random-hyperplane LSH proposes candidates from (band_id, band_key)
-    bucket self-joins (never all-pairs, corpus never collected), then
-    ONLY candidates are exactly re-scored with the deterministic fold.
-    Same schema as ``embedding_neardup_pairs``; recall < 1 by
-    construction (measured floor asserted in
-    test_similarity_extra::test_lsh_neardup_recall). At production
-    thresholds (cos ≥ 0.85) the per-bit collision gap is wide and
-    recall approaches 1 with modest bands; at this fixture's 0.4
-    threshold it demonstrates the machinery.
-    """
-    emb = _with_norm(t["embeddings"])
-    dim = len(emb.select("embedding").first()[0])
-    # r13: pin the signature stage ONCE — both sides of the banded
-    # self-join consume it, and Catalyst inlines each reference as a
-    # plan copy, so the Arrow matmul signature pass (corpus scan +
-    # Python boundary) executed TWICE per run. 12 bytes/vec × bands,
-    # linear and bounded.
-    sig = _hyperplane_signatures(t["embeddings"], dim).localCheckpoint()
-    a = sig.select(F.col("vec_id").alias("id_a"), "band_id", "band_key")
-    b = sig.select(F.col("vec_id").alias("id_b"), "band_id", "band_key")
-    cand = (
-        a.join(b, ["band_id", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    ea = emb.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("e_a"), F.col("norm").alias("n_a")
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("e_b"), F.col("norm").alias("n_b")
-    )
-    return (
-        ea.join(cand, "id_a")
-        .join(eb, "id_b")
-        .withColumn("cos", F.expr(DOT.format(a="e_a", b="e_b")) / (F.col("n_a") * F.col("n_b")))
-        .filter(F.col("cos") >= NEARDUP_THRESHOLD)
-        .select("id_a", "id_b", F.expr("cast(round(cos * 10000) as bigint)").alias("cos_e4"))
     )
 
 
@@ -1081,57 +895,13 @@ def ann_rrf_fusion(t: dict[str, DataFrame]) -> DataFrame:
     rankings (PUB TrafficStatsController keyword/channel lists) into
     the standard multi-retriever merge.
     """
-    import numpy as np
-    import pandas as pd
-
     cos_leg = cosine_topk(t).select(
         "q_id", "neighbor_id", F.col("rank").alias("rank_cos")
     )
-
     emb = t["embeddings"]
-    spark = emb.sparkSession
-    qpdf = _collect_query_side(
-        emb.filter(F.col("vec_id") % QUERY_MOD == 0).select("vec_id", "embedding"),
-        "ann_rrf_fusion",
-    )
-    q_ids = qpdf["vec_id"].to_numpy(dtype=np.int64)
-    q_mat = np.stack(qpdf["embedding"].to_numpy()).astype(np.float64)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-    n_cand = TOP_K + CAND_PAD
-
-    def gen(batches):
-        b_ids, b_mat = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            dot = (c_mat @ b_mat.T).T
-            dot[b_ids[:, None] == c_ids[None, :]] = -np.inf
-            k = min(n_cand, dot.shape[1])
-            idx = np.argpartition(-dot, kth=k - 1, axis=1)[:, :k]
-            rows = np.repeat(np.arange(len(b_ids)), k)
-            yield pd.DataFrame({"q_id": b_ids[rows], "neighbor_id": c_ids[idx.ravel()]})
-
-    cand = (
-        emb.select("vec_id", "embedding")
-        .mapInPandas(gen, "q_id long, neighbor_id long")
-        .filter(F.col("q_id") != F.col("neighbor_id"))
-    )
-    qside = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"))
-    cside = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("n_emb")
-    )
-    rescored = (
-        qside.join(F.broadcast(cand), "q_id")
-        .join(cside, "neighbor_id")
-        .withColumn("dot", F.expr(DOT.format(a="q_emb", b="n_emb")))
-    )
-    wd = Window.partitionBy("q_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
-    dot_leg = (
-        rescored.withColumn("rank_dot", F.row_number().over(wd))
-        .filter(F.col("rank_dot") <= TOP_K)
-        .select("q_id", "neighbor_id", "rank_dot")
+    cand = _propose_broadcast(emb, "ann_rrf_fusion", cosine=False)
+    dot_leg = _rescore_topk(emb, cand, "ann_rrf_fusion", cosine=False).select(
+        "q_id", "neighbor_id", F.col("rank").alias("rank_dot")
     )
 
     fused = (
@@ -2576,12 +2346,13 @@ def embedding_recall_at_k(t: dict[str, DataFrame]) -> DataFrame:
     not statistical drift.
 
     Ground truth: full-vector micro-unit squared-L2 top-k in the
-    ``cosine_topk_pandas`` batch-matmul shape (r13): the SAMPLED query
-    side collects under ``_collect_query_side``'s hard cap and
-    broadcasts as one int64 matrix, each corpus batch is scored with a
-    single exact int64 GEMM, per-batch top-k feeds one keyed global
-    window — the corpus never collects, and the arithmetic is integer,
-    so the all-pairs SQL oracle stays bit-valid. The approximate leg
+    broadcast-query batch-matmul shape of ``_propose_broadcast``: the
+    SAMPLED query side collects under ``_collect_query_side``'s hard
+    cap and broadcasts as one int64 matrix, each corpus batch is scored
+    with a single exact int64 GEMM, and the shared ``_propose_topk``
+    selection (on −d) feeds one keyed global window — the corpus never
+    collects, and the arithmetic is integer, so the all-pairs SQL
+    oracle stays bit-valid and no fold rescore is needed. The approximate leg
     is :func:`ann_ivf_pq_topk` unchanged. recall_e4 = hits·10⁴ / k.
 
     Scale: the exact leg is the designed Q×C arithmetic bound —
@@ -2590,17 +2361,14 @@ def embedding_recall_at_k(t: dict[str, DataFrame]) -> DataFrame:
     the sample stops being sample-sized; the uncapped two-sided shape
     lives in :func:`topk_two_sided_exact`).
     """
-    # r13 (guide §4.2): the ground-truth leg's Q×C integer-L2 scoring
-    # moved from a chunked join + per-pair zip_with/aggregate fold
-    # (~190k interpreted 64-element HOF evaluations at sf0.1) to the
-    # package's established Arrow batch-matmul shape (cosine_topk_pandas):
-    # queries broadcast as one int64 matrix, each corpus batch scored
-    # with ONE numpy GEMM, per-batch top-k emitted, global keyed window
-    # unchanged. BIT-IDENTICAL by construction — d = q²+c²−2q·c over
-    # int64 micro-units (|xm| ≤ ~6e5 ⇒ |d| ≤ ~9e13, far inside int64;
-    # numpy int64 arithmetic is exact there), ties broken (d, vec_id)
-    # exactly as before; a per-batch top-k always contains the global
-    # top-k members of that batch, so the window sees a superset of the
+    # One numpy GEMM per corpus batch instead of a per-pair
+    # zip_with/aggregate fold (~190k interpreted 64-element HOF
+    # evaluations at sf0.1). BIT-IDENTICAL by construction —
+    # d = q²+c²−2q·c over int64 micro-units (|xm| ≤ ~6e5 ⇒
+    # |d| ≤ ~9e13, far inside int64; numpy int64 arithmetic is exact
+    # there), ties broken (d, vec_id) by the (−d DESC, id ASC)
+    # selection; a per-batch top-k always contains the global top-k
+    # members of that batch, so the window sees a superset of the
     # winners. The query side stays capped by _collect_query_side's
     # MAX_QUERY_ROWS failure contract; the corpus is never collected.
     import numpy as np
@@ -2629,11 +2397,11 @@ def embedding_recall_at_k(t: dict[str, DataFrame]) -> DataFrame:
                 c_sq = (c_mat * c_mat).sum(axis=1)
                 # (n_queries, batch) exact int64 squared-L2 distances
                 d = b_sq[:, None] + c_sq[None, :] - 2 * (b_mat @ c_mat.T)
-                k = min(TOP_K, d.shape[1])
-                # ties broken (d, vec_id): lexsort is stable over both keys
-                order = np.lexsort((np.broadcast_to(c_ids, d.shape), d), axis=1)[:, :k]
-                rows = np.repeat(np.arange(len(b_ids)), k)
-                cols = order.ravel()
+                # queries and corpus are disjoint, so no self pair is
+                # masked and the int64 distances stay exact
+                idx, _ = _propose_topk(-d, b_ids, c_ids, TOP_K)
+                rows = np.repeat(np.arange(len(b_ids)), idx.shape[1])
+                cols = idx.ravel()
                 yield pd.DataFrame(
                     {
                         "q_id": b_ids[rows],
@@ -2698,12 +2466,9 @@ ORACLES["embedding_recall_at_k"] = f"""
 
 BUILDERS = {
     "cosine_topk": cosine_topk,
-    "cosine_topk_pandas": cosine_topk_pandas,
     "embedding_neardup_pairs": embedding_neardup_pairs,
     "embedding_neardup_scoped": embedding_neardup_scoped,
     "cosine_topk_ivf": cosine_topk_ivf,
-    "cosine_topk_ivf_kmeans": cosine_topk_ivf_kmeans,
-    "embedding_neardup_lsh": embedding_neardup_lsh,
     "sim_label_centroids": label_centroids,
     "embedding_semdedup": semdedup_prune,
     "topk_two_sided_ann": topk_two_sided_ann,

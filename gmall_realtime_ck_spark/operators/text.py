@@ -178,29 +178,6 @@ def doc_fingerprint(t: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def doc_fingerprint_fast(t: dict[str, DataFrame]) -> DataFrame:
-    """The production fast path of doc_fingerprint: xxhash64 (JVM
-    intrinsic, ~3× md5 — SCALE.md) over the same shingle pipeline.
-    Rows-only: xxhash64 has no DuckDB twin, so values aren't
-    cross-checked — the md5 variant is the oracle-exact one.
-    """
-    docs = t["documents"]
-    tokenized = docs.select("doc_id", F.expr(TOKENS_SPARK.format(c="text")).alias("tk"))
-    return (
-        tokenized.select(
-            "doc_id",
-            F.explode_outer(F.array_distinct(F.expr(shingles_from_tokens("tk", 3)))).alias("s"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.coalesce(
-                F.sum(F.xxhash64("s") % MOD_P) % MOD_P, F.lit(0).cast("bigint")
-            ).alias("fingerprint"),
-            F.count("s").alias("n_shingles"),
-        )
-    )
-
-
 def corpus_clean_manifest(t: dict[str, DataFrame]) -> DataFrame:
     """Capstone training-data query: the per-document keep/drop
     manifest a cleaning pipeline ships — keep = passes quality gates
@@ -2677,7 +2654,6 @@ BUILDERS = {
     "text_quality_score": text_quality_score,
     "text_lang_id": text_lang_id,
     "text_doc_fingerprint": doc_fingerprint,
-    "text_doc_fingerprint_fast": doc_fingerprint_fast,  # rows-only (xxhash64)
     "text_clean_manifest": corpus_clean_manifest,  # oracle in dedup.py
     "text_bigram_topk": bigram_topk,
     "doc_perplexity_bigram": doc_perplexity_bigram,

@@ -101,15 +101,14 @@ def test_priority_head_integrity():
     """The driver verifies the first 50 positions of queries().
     all_query_names() silently drops unimplemented _PRIORITY_HEAD
     names, so a typo there would silently burn a driver-row slot —
-    pin that every head name resolves, is unique, is not bench-only,
-    and the head fills the 50-slot window exactly."""
+    pin that every head name resolves, is unique, and the head fills
+    the 50-slot window exactly."""
     declared = set(registry.BUILDERS) | set(registry.STREAM_BUILDERS)
     head = registry._PRIORITY_HEAD
     missing = [n for n in head if n not in declared]
     assert not missing, f"priority head names not implemented: {missing}"
     assert len(head) == len(set(head)), "duplicate names in priority head"
     assert len(head) == 50, f"head has {len(head)} names; the driver window is 50"
-    assert not (set(head) & registry.BENCH_ONLY)
     assert registry.all_query_names()[:50] == head
 
 
@@ -128,7 +127,7 @@ def test_no_orphan_oracles():
     """Every oracle key must name a declared query — an orphan oracle
     is dead SQL that silently rots (and confuses the driver's
     contract surface)."""
-    declared = set(registry.BUILDERS) | set(registry.STREAM_BUILDERS) | registry.BENCH_ONLY
+    declared = set(registry.BUILDERS) | set(registry.STREAM_BUILDERS)
     orphans = sorted(set(registry.ORACLES) - declared)
     assert not orphans, f"oracles without queries: {orphans}"
 

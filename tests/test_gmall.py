@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from gmall_realtime_ck_spark import serving
 from gmall_realtime_ck_spark.gmall import dim, dwd, dws, fixtures
 
 
@@ -329,15 +330,15 @@ def test_serving_queries(db, log_raw, spark):
         "province_name", F.concat(F.lit("prov-"), F.col("province_id"))
     )
     some_date = pw.select("cur_date").first()["cur_date"]
-    gmv = dws.serving_gmv(pw, some_date).collect()[0]["gmv"]
+    gmv = serving.gmv(pw, some_date).collect()[0]["gmv"]
     assert gmv is not None and float(gmv) > 0
-    prov = dws.serving_province_amounts(pw, some_date).collect()
+    prov = serving.province_amounts(pw, some_date).collect()
     assert prov and all(r["total_amount"] is not None for r in prov)
 
     page = dwd.split_log(log_raw)["page"]
     tw = dws.traffic_page_view_window(page, size="1 hour")
     ch_date = tw.select("cur_date").first()["cur_date"]
-    topk = dws.serving_channel_uv_topk(tw, ch_date, limit=3).collect()
+    topk = serving.channel_uv_topk(tw, ch_date, limit=3).collect()
     assert len(topk) <= 3
     assert [r["uv_ct"] for r in topk] == sorted([r["uv_ct"] for r in topk], reverse=True)
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from gmall_realtime_ck_spark.operators import dedup
 from gmall_realtime_ck_spark.operators import multimodal as mm
 
 
@@ -73,21 +74,26 @@ def test_resize_media_plumbing(media):
         mm.resize_image(b"xx", "image/jpeg", 64, 64)
 
 
-def test_phash_gram_cache_is_pure_memoization(tables, monkeypatch):
-    """Law (r14, VERDICT r13 #5): the per-task md5 gram cache inside
-    the phash fingerprint is BOUNDED (PHASH_GRAM_CACHE_CAP) and pure —
-    running the whole near-dup query with the cache effectively
-    disabled (cap 0 ⇒ cleared on every insert) must produce identical
-    pairs. The cap is captured as a closure value at BUILD time, so
-    patching the module constant before building is sufficient."""
-    baseline = sorted(
-        (r["media_a"], r["media_b"], r["hamming"])
-        for r in mm.xmodal_phash_neardup(tables).collect()
-    )
-    assert baseline, "fixture produced no near-dup pairs"
-    monkeypatch.setattr(mm, "PHASH_GRAM_CACHE_CAP", 0)
-    uncached = sorted(
-        (r["media_a"], r["media_b"], r["hamming"])
-        for r in mm.xmodal_phash_neardup(tables).collect()
-    )
+def _assert_md5_memo_is_pure(tables, monkeypatch, build, cols):
+    """Law: the per-task md5 memo shared by the
+    phash and simhash fingerprints (dedup.md5_bits_memo) is BOUNDED
+    (MD5_BITS_CACHE_CAP) and pure — running the whole query with the
+    memo effectively disabled (cap 0 ⇒ cleared on every insert) must
+    produce identical rows. The cap is captured as a closure value at
+    BUILD time, so patching the module constant before building is
+    sufficient."""
+    baseline = sorted(tuple(r[c] for c in cols) for r in build(tables).collect())
+    assert baseline, "fixture produced no rows"
+    monkeypatch.setattr(dedup, "MD5_BITS_CACHE_CAP", 0)
+    uncached = sorted(tuple(r[c] for c in cols) for r in build(tables).collect())
     assert uncached == baseline
+
+
+def test_phash_gram_cache_is_pure_memoization(tables, monkeypatch):
+    _assert_md5_memo_is_pure(
+        tables, monkeypatch, mm.xmodal_phash_neardup, ("media_a", "media_b", "hamming")
+    )
+
+
+def test_simhash_token_cache_is_pure_memoization(tables, monkeypatch):
+    _assert_md5_memo_is_pure(tables, monkeypatch, dedup.simhash_docs, ("doc_id", "simhash"))

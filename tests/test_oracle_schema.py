@@ -68,7 +68,7 @@ def _assert_scalar_schema(name: str, schema) -> None:
     )
 
 
-DECLARED_BATCH = sorted(n for n in registry.BUILDERS if n not in registry.BENCH_ONLY)
+DECLARED_BATCH = sorted(registry.BUILDERS)
 
 
 @pytest.mark.parametrize("name", DECLARED_BATCH)

@@ -1,7 +1,6 @@
-"""Cross-variant ANN consistency: the Arrow block-matmul path must
-agree with the exact HOF path on non-degenerate data; scale contracts
-(no corpus collect, bounded query collect, recall floors) are pinned
-here."""
+"""ANN consistency and scale contracts: exact top-k tie order and its
+propose-containment guard, approximate-path recall floors, no corpus
+collect, bounded query collect."""
 
 from __future__ import annotations
 
@@ -9,17 +8,6 @@ import pytest
 from pyspark.sql import DataFrame
 
 from gmall_realtime_ck_spark.operators import similarity as sim
-
-
-def test_pandas_topk_agrees_with_exact(tables):
-    exact = {
-        (r["q_id"], r["rank"]): r["neighbor_id"] for r in sim.cosine_topk(tables).collect()
-    }
-    fast = {
-        (r["q_id"], r["rank"]): r["neighbor_id"]
-        for r in sim.cosine_topk_pandas(tables).collect()
-    }
-    assert exact == fast
 
 
 def test_ivf_is_subset_quality(tables):
@@ -75,23 +63,6 @@ def test_neardup_never_collects_corpus(tables, monkeypatch):
     monkeypatch.setattr(DataFrame, "toPandas", boom)
     df = sim.embedding_neardup_pairs(tables)
     df.explain()  # force full planning
-    df2 = sim.embedding_neardup_lsh(tables)
-    df2.explain()
-
-
-def test_lsh_neardup_recall(tables):
-    """The approximate LSH path: every reported pair is a true pair
-    with the exact cosine value (exact re-score), and recall against
-    the exact operator clears the floor for the seeded planes."""
-    exact = {(r["id_a"], r["id_b"]): r["cos_e4"]
-             for r in sim.embedding_neardup_pairs(tables).collect()}
-    approx = {(r["id_a"], r["id_b"]): r["cos_e4"]
-              for r in sim.embedding_neardup_lsh(tables).collect()}
-    assert set(approx) <= set(exact)  # no false positives, values exact
-    for k, v in approx.items():
-        assert v == exact[k]
-    recall = len(approx) / max(1, len(exact))
-    assert recall >= 0.5, f"LSH near-dup recall {recall:.3f} below floor"
 
 
 def test_two_sided_ann_never_collects_queries(tables, monkeypatch):
@@ -129,27 +100,24 @@ def test_query_collect_guard(tables, monkeypatch):
 def test_exact_neardup_rejects_unbounded_corpus(tables, monkeypatch):
     """Scale contract (VERDICT r2 #4): the exact block-pair path's
     shuffle is O(n²/BLOCK_ROWS) — past MAX_EXACT_NEARDUP_ROWS it must
-    refuse with a pointer to the LSH / cluster-scoped paths, not melt
-    the shuffle service."""
+    refuse with a pointer to the cluster-scoped paths
+    (embedding_neardup_scoped / embedding_semdedup), not melt the
+    shuffle service."""
     monkeypatch.setattr(sim, "MAX_EXACT_NEARDUP_ROWS", 10)
-    with pytest.raises(ValueError, match="MAX_EXACT_NEARDUP_ROWS"):
+    with pytest.raises(ValueError, match="MAX_EXACT_NEARDUP_ROWS") as err:
         sim.embedding_neardup_pairs(tables).collect()
+    assert "embedding_neardup_scoped" in str(err.value)
 
 
-def test_kmeans_ivf_recall_floor(tables):
-    """The k-means-refined IVF variant must clear the same
-    probing-beats-random recall floor as the label-cell variant."""
-    exact = {}
-    for r in sim.cosine_topk(tables).collect():
-        exact.setdefault(r["q_id"], set()).add(r["neighbor_id"])
-    ref = {}
-    for r in sim.cosine_topk_ivf_kmeans(tables).collect():
-        ref.setdefault(r["q_id"], set()).add(r["neighbor_id"])
-    hits = sum(len(exact[q] & ref.get(q, set())) for q in exact)
-    total = sum(len(v) for v in exact.values())
-    n_cells = tables["embeddings"].select("label").distinct().count()
-    assert total > 0
-    assert hits / total > sim.N_PROBE / n_cells
+def test_propose_guard_raises_on_violation(tables, monkeypatch):
+    """The shared rescore's containment guard must RAISE, not return a
+    silently wrong top-k, when a kept score falls below the propose
+    boundary minus the margin. A negative drift eps makes the margin
+    demand score ≥ boundary + max(1, |boundary|), which no cosine
+    meets on a corpus whose blocks are cut (500 vectors ≫ k+pad)."""
+    monkeypatch.setattr(sim, "PROPOSE_DRIFT_EPS", -1.0)
+    with pytest.raises(Exception, match="propose containment violated"):
+        sim.cosine_topk(tables).collect()
 
 
 def test_pca_axis_tracks_float_krylov(tables):
@@ -173,12 +141,15 @@ def test_pca_axis_tracks_float_krylov(tables):
     assert corr > 0.999, corr
 
 
-def test_two_sided_exact_duplicate_vector_ties(spark):
-    """Tie + propose-boundary stress for topk_two_sided_exact (r14,
-    VERDICT r13 #6): 200 vectors drawn from 5 duplicated directions
-    give 40 exact copies per direction, so every chunk is CUT OFF
-    (25 rows avg > k+pad = 15) with exact-cos ties spanning the
-    propose boundary — the worst case for both the deterministic
+@pytest.mark.parametrize("builder", ["cosine_topk", "topk_two_sided_exact"])
+def test_two_sided_exact_duplicate_vector_ties(spark, builder):
+    """Tie + propose-boundary stress for the exact top-k builders:
+    200 vectors drawn from 5 duplicated directions give 40 exact
+    copies per direction. The corpus sits in ONE partition, so
+    cosine_topk's single Arrow batch holds 39 exact ties per query —
+    more than k+pad = 15 — and topk_two_sided_exact's chunks (25 rows
+    avg) are cut off too, with exact-cos ties spanning the propose
+    boundary. That is the worst case for both the deterministic
     (cos DESC, id ASC) tie order and the runtime containment guard
     (kept cos == boundary cos, which must satisfy the eps margin, not
     raise). Expected ranks are brute-forced with the same sequential
@@ -195,8 +166,8 @@ def test_two_sided_exact_duplicate_vector_ties(spark):
     vecs = {i: pool[i % len(pool)] for i in range(200)}
     emb = spark.createDataFrame(
         [(i, v) for i, v in vecs.items()], "vec_id long, embedding array<double>"
-    )
-    out = sim.topk_two_sided_exact({"embeddings": emb}).collect()
+    ).coalesce(1)
+    out = getattr(sim, builder)({"embeddings": emb}).collect()
 
     def dot(a, b):
         acc = 0.0

@@ -39,8 +39,8 @@ BATCH = [
     "sample_domain_cap",
     # r14 (VERDICT r13 #1): extend to the top-10 cost queries of the
     # r13 map so the round-bracketing A/B covers the expensive paths.
-    "corpus_e2e_verdict", "graph_pagerank", "embedding_neardup_lsh",
-    "text_neardup_clusters", "cosine_topk_ivf_kmeans",
+    "corpus_e2e_verdict", "graph_pagerank", "embedding_neardup_pairs",
+    "text_neardup_clusters", "embedding_kmeans_assign",
 ]
 # flow_repetition added r12 (it was rewired that round and the fixed
 # subset had no coverage of it — its 4× regression would have been

@@ -45,7 +45,7 @@ def main() -> int:
         "q1_pricing_summary",
         "win_running_gmv",
         "text_dedup_exact",
-        "cosine_topk_pandas",
+        "cosine_topk",
     ):
         if warm_name in registry.BUILDERS:
             try:
